@@ -1,6 +1,6 @@
-"""Training-shard export sink (sinks/export.py) and the Spark 4
-transformWithState operator (environment-gated — see
-streaming/pipelines.py::tws_available).
+"""Training-shard export sink (sinks/export.py): round trip,
+determinism, manifest verification, and agreement with the
+shuffle_export declared query.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from vcf2db_spark.sinks.export import (
     read_training_shards,
     write_training_shards,
 )
-from vcf2db_spark.streaming.pipelines import tws_available
 
 SF = "/root/testdata/sf0.001"
 
@@ -75,50 +74,3 @@ def test_export_shard_matches_declared_query(spark, tmp_path):
         .count()
     )
     assert mismatch == 0
-
-
-@pytest.mark.skipif(
-    not tws_available(),
-    reason="transformWithState needs the protobuf package (not in this container)",
-)
-def test_tws_parity_with_apply_in_pandas_with_state(spark):
-    """Cross-API check: the transformWithState totals must equal the
-    applyInPandasWithState totals (final per-user rows)."""
-    from vcf2db_spark.streaming.pipelines import (
-        read_events_stream,
-        run_to_memory,
-        running_totals_stateful,
-        running_totals_tws,
-        stage_events_dir,
-    )
-
-    src = stage_events_dir(SF)
-    a = run_to_memory(
-        running_totals_stateful(read_events_stream(spark, src)),
-        "tws_a",
-        output_mode="update",
-    )
-    b = run_to_memory(
-        running_totals_tws(read_events_stream(spark, src)),
-        "tws_b",
-        output_mode="update",
-    )
-
-    def final(df):
-        return sorted(map(tuple, df.groupBy("user_id").agg(
-            F.max("n_events"), F.max("total_value")).collect()))
-
-    assert final(a) == final(b)
-
-
-def test_tws_gate_raises_without_protobuf(spark):
-    if tws_available():
-        pytest.skip("protobuf present; gate not exercisable")
-    from vcf2db_spark.streaming.pipelines import (
-        read_events_stream,
-        running_totals_tws,
-        stage_events_dir,
-    )
-
-    with pytest.raises(RuntimeError, match="protobuf"):
-        running_totals_tws(read_events_stream(spark, stage_events_dir(SF)))

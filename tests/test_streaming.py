@@ -9,9 +9,11 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table
+from vcf2db_spark.session import scoped_conf
 from vcf2db_spark.streaming import (
     dedup_within_watermark,
     read_events_stream,
@@ -231,11 +233,59 @@ def test_final_no_data_batch_output_identity(spark, events_dup_dir):
     assert len(on) > 0 and off == []
 
 
+def test_scoped_conf_restores_prior_state(spark):
+    """A previously-unset key is unset again on exit, a set key gets its
+    old value back after an exception, and nested scopes unwind in
+    order."""
+    unset_key, set_key = "vcf2db.test.scoped.unset", "vcf2db.test.scoped.set"
+    spark.conf.set(set_key, "outer")
+    try:
+        with scoped_conf(spark, {unset_key: "a"}):
+            assert spark.conf.get(unset_key) == "a"
+        assert spark.conf.get(unset_key, None) is None
+
+        with pytest.raises(RuntimeError, match="boom"):
+            with scoped_conf(spark, {set_key: "inner"}):
+                assert spark.conf.get(set_key) == "inner"
+                raise RuntimeError("boom")
+        assert spark.conf.get(set_key) == "outer"
+
+        with scoped_conf(spark, {set_key: "one", unset_key: "x"}):
+            with scoped_conf(spark, {set_key: "two"}):
+                assert spark.conf.get(set_key) == "two"
+                assert spark.conf.get(unset_key) == "x"
+            assert spark.conf.get(set_key) == "one"
+            assert spark.conf.get(unset_key) == "x"
+        assert spark.conf.get(set_key) == "outer"
+        assert spark.conf.get(unset_key, None) is None
+    finally:
+        spark.conf.unset(set_key)
+
+
+def test_run_to_memory_restores_conf_on_error(spark, events_dir):
+    """A drain that fails before it starts (here: an invalid output mode)
+    must leave the session conf exactly as it found it."""
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.minBatchesToRetain",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    with pytest.raises(IllegalArgumentException, match="bogus"):
+        run_to_memory(
+            tumbling_counts(read_events_stream(spark, events_dir)),
+            "t_conf_leak",
+            output_mode="bogus",
+            final_no_data_batch=False,
+        )
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
 def test_rocksdb_state_store_matches_default(spark, events_dup_dir):
     """The RocksDB provider (production posture: state on SSD, bounded
     heap) must be a pure deployment knob — identical results to the
     default heap-backed store on stateful dedup + windowed agg."""
-    from vcf2db_spark.streaming import ROCKSDB_PROVIDER, state_store_provider
+    from vcf2db_spark.streaming import ROCKSDB_PROVIDER
 
     def drain(suffix):
         dedup = run_to_memory(
@@ -252,7 +302,9 @@ def test_rocksdb_state_store_matches_default(spark, events_dup_dir):
         )
 
     base_dedup, base_tumble = drain("heap")
-    with state_store_provider(spark, ROCKSDB_PROVIDER):
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    ):
         assert (
             spark.conf.get("spark.sql.streaming.stateStore.providerClass")
             == ROCKSDB_PROVIDER

@@ -15,6 +15,7 @@ import pandas as pd  # noqa: F401  (applyInPandasWithState dependency)
 from pyspark.sql import DataFrame, functions as F
 
 from vcf2db_spark.registry import dq
+from vcf2db_spark.session import scoped_conf
 from vcf2db_spark.streaming import (
     dedup_within_watermark,
     read_events_stream,
@@ -154,20 +155,16 @@ def stream_sink_parquet(spark, sf_dir):
     base = os.path.join("/tmp", f"vcf2db_sinkdq_{os.getpid()}_{_SINK_CALLS}")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        (
             agg.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_windows"),

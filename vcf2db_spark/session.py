@@ -8,6 +8,8 @@ count is a starting hint that AQE re-plans. Only ``master`` changes.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -173,6 +175,35 @@ def pin_session_conf(spark: SparkSession) -> None:
         pass  # static conf on some builds; VCF pushdown then stays off
     _ship_package(spark)
     spark._vcf2db_pinned = True
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set runtime ``confs`` for the body of a ``with`` block, then put
+    the session back: each key gets its previous value again, or is
+    unset if it was unset before, also when the body raises. Nested
+    scopes unwind innermost first.
+
+    The conf lives on the SparkSession, not the thread, so a scope is
+    visible to everything the session runs while it is open. Run at
+    most one scoped drain per session at a time: two concurrent drains
+    interleave their set/restore pairs, and one can run (or end) with
+    the other's value — e.g. a drain that needs the final no-data
+    micro-batch (append-mode window aggregates) silently emits zero rows
+    under another drain's ``noDataMicroBatches.enabled=false``. Callers
+    that must drain concurrently use one session per drain
+    (``spark.newSession()``)."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, old in prev.items():
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -21,6 +21,5 @@ from vcf2db_spark.streaming.pipelines import (  # noqa: F401
     session_counts,
     sliding_avg,
     stage_events_dir,
-    state_store_provider,
     tumbling_counts,
 )

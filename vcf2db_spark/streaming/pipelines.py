@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from vcf2db_spark.session import scoped_conf
+
 # Ephemeral tmpfs scratch (checkpoints / drain state): cleared at the
 # START of each reuse (release-on-next-call) AND at interpreter exit —
 # the last call of a process has no next call, which leaked one dir per
@@ -281,33 +283,13 @@ def running_totals_stateful(events: DataFrame) -> DataFrame:
 #: (stream dedup over billions of doc ids, per-user session state) that
 #: OOMs. RocksDB keeps state on local SSD with block-cache reads,
 #: incremental changelog checkpoints, and bounded memory — the production
-#: posture for every stateful pipeline in this module.
+#: posture for every stateful pipeline in this module. Queries read the
+#: provider at start, so select it around the start with ``scoped_conf``
+#: on ``spark.sql.streaming.stateStore.providerClass``; results are
+#: identical across providers (tests/test_streaming.py).
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-class state_store_provider:
-    """Context manager pinning the state-store backend for queries started
-    inside it (the conf is read at query start). Results must be identical
-    across providers — asserted in tests/test_streaming.py — so this is a
-    pure deployment knob, not a semantics switch."""
-
-    def __init__(self, spark: SparkSession, provider: str = ROCKSDB_PROVIDER):
-        self._spark, self._provider = spark, provider
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get(_PROVIDER_KEY, None)
-        self._spark.conf.set(_PROVIDER_KEY, self._provider)
-        return self
-
-    def __exit__(self, *exc):
-        if self._prev is None:
-            self._spark.conf.unset(_PROVIDER_KEY)
-        else:
-            self._spark.conf.set(_PROVIDER_KEY, self._prev)
 
 
 # -------------------------------------------------------------------------
@@ -343,44 +325,38 @@ def run_to_memory(
     test_final_no_data_batch_output_identity. Callers opt in per QUERY
     SEMANTICS, never per scale."""
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(_NODATA_KEY, "true")
+    confs = {
+        # State-store instances sized by INPUT VOLUME: per-store WAL/commit
+        # fixed costs dominate tiny drains (8→4 measured ~12% on the
+        # stream-stream join at sf0.1), but starving a larger drain of
+        # parallelism costs more (stateful totals at sf1: 20.3 s @4 parts
+        # vs 14.1 s @8). One file-size probe of the stream's source dirs
+        # picks ~one store per 32 MB, clamped to [4, 16]; a real
+        # deployment sizes this to state volume / executor count instead.
+        "spark.sql.shuffle.partitions": str(_drain_partitions(sdf)),
+        # state-version retention exists for failure recovery of
+        # long-running streams; an ephemeral availableNow drain needs
+        # none of it (~10%)
+        "spark.sql.streaming.minBatchesToRetain": "1",
+    }
     if not final_no_data_batch:
-        spark.conf.set(_NODATA_KEY, "false")
-    # State-store instances sized by INPUT VOLUME: per-store WAL/commit
-    # fixed costs dominate tiny drains (8→4 measured ~12% on the
-    # stream-stream join at sf0.1), but starving a larger drain of
-    # parallelism costs more (stateful totals at sf1: 20.3 s @4 parts vs
-    # 14.1 s @8). One file-size probe of the stream's source dirs picks
-    # ~one store per 32 MB, clamped to [4, 16]; a real deployment sizes
-    # this to state volume / executor count instead.
-    spark.conf.set("spark.sql.shuffle.partitions", str(_drain_partitions(sdf)))
-    # state-version retention exists for failure recovery of long-running
-    # streams; an ephemeral availableNow drain needs none of it (~10%)
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    writer = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    # checkpoint+state to tmpfs when available: the WAL/state fsyncs are
-    # pure fixed cost for an ephemeral local drain (a real deployment
-    # points this at durable object storage instead)
-    if os.path.isdir("/dev/shm"):
-        ckpt = _ephemeral_dir(
-            os.path.join("/dev/shm", f"vcf2db_ckpt_{name}_{os.getpid()}")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_conf(spark, confs):
+        writer = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
         )
-        writer = writer.option("checkpointLocation", ckpt)
-    try:
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        spark.conf.set(_NODATA_KEY, prev_nodata)
+        # checkpoint+state to tmpfs when available: the WAL/state fsyncs
+        # are pure fixed cost for an ephemeral local drain (a real
+        # deployment points this at durable object storage instead)
+        if os.path.isdir("/dev/shm"):
+            ckpt = _ephemeral_dir(
+                os.path.join("/dev/shm", f"vcf2db_ckpt_{name}_{os.getpid()}")
+            )
+            writer = writer.option("checkpointLocation", ckpt)
+        writer.start().awaitTermination()
     return spark.table(name)
 
 
@@ -599,19 +575,16 @@ def upsert_latest_drain(
                 shutil.rmtree(old, ignore_errors=True)
 
     s = read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_drain_partitions(s)))
     ckpt = os.path.join(work_dir, "ckpt")
-    try:
-        q = (
+    parts = str(_drain_partitions(s))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+        (
             s.writeStream.foreachBatch(merge)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # the stream is finished: its checkpoint/WAL is dead weight now; the
     # final state version must survive until the NEXT drain (the caller's
     # DataFrame reads it lazily)
@@ -622,74 +595,3 @@ def upsert_latest_drain(
     # union of every bucket's latest version (partitionBy left `_b` out
     # of the data files, so this reads the plain event columns)
     return spark.read.parquet(*sorted(bucket_latest.values()))
-
-
-# -------------------------------------------------------------------------
-# Spark 4 transformWithState — the successor stateful API (typed state
-# variables, timers, TTL) for applyInPandasWithState-style operators.
-# ENVIRONMENT GATE: its Python driver worker speaks protobuf to the JVM;
-# this container ships no `protobuf` package and installs are not
-# allowed, so the operator raises a documented error here and runs
-# wherever protobuf exists (tests/test_export_tws.py skips accordingly —
-# same honest-boundary treatment as the entropy-coded media formats in
-# functions/media_codecs.py).
-# -------------------------------------------------------------------------
-
-
-def tws_available() -> bool:
-    """True iff the transformWithState Python worker can start (needs the
-    `protobuf` package for its control-plane channel)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on transformWithStateInPandas — the same
-    semantics as ``running_totals_stateful`` (its cross-API parity twin)
-    expressed with a typed ValueState instead of the GroupState tuple.
-    Requires the RocksDB state-store provider (set by the caller/drain)
-    and a protobuf-capable Python env (see ``tws_available``)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the `protobuf` package "
-            "for its Python worker control channel; not available in "
-            "this environment (see tws_available())."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self._st = handle.getValueState("tot", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._st.get() if self._st.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._st.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                }
-            )
-
-        def close(self):
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _Totals(), outputStructType=_RUNNING_SCHEMA, outputMode="Update", timeMode="None"
-    )
