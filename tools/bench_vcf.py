@@ -180,6 +180,7 @@ def main() -> None:
     if tables.variant_impacts is not None:
         write_parquet(tables.variant_impacts, f"{out}/variant_impacts", partition_by=())
     secs = time.perf_counter() - t0
+    tables.cached.unpersist()
     n_variants = spark.read.parquet(f"{out}/variants").count()
     n_impacts = (
         spark.read.parquet(f"{out}/variant_impacts").count()
@@ -208,6 +209,7 @@ def main() -> None:
             {"variants": tables2.variants, "variant_impacts": tables2.variant_impacts},
         )
         sq_secs = time.perf_counter() - t0
+        tables2.cached.unpersist()
         result["sqlite_seconds"] = round(sq_secs, 2)
         result["sqlite_variants_per_sec"] = round(counts["variants"] / sq_secs)
 

@@ -398,73 +398,77 @@ def main(argv: list[str] | None = None) -> int:
         decompose="split" if args.decompose else "reject",
     )
 
-    variants = tables.variants
-    if args.legacy_compression and not args.db.endswith(".db"):
-        # (the SQLite sink packs genotype matrices to blobs natively)
-        # blob twins for the integer genotype matrices (gts is the string
-        # base rendering — not blob-packed; gemini reads the int matrices)
-        pack = pack_blob_udf(legacy=True)
-        for c in ("gt_types", "gt_depths", "gt_ref_depths", "gt_alt_depths", "gt_quals"):
-            if c in variants.columns:
-                variants = variants.withColumn(f"{c}_blob", pack(F.col(c)))
+    try:
+        variants = tables.variants
+        if args.legacy_compression and not args.db.endswith(".db"):
+            # (the SQLite sink packs genotype matrices to blobs natively)
+            # blob twins for the integer genotype matrices (gts is the string
+            # base rendering — not blob-packed; gemini reads the int matrices)
+            pack = pack_blob_udf(legacy=True)
+            for c in ("gt_types", "gt_depths", "gt_ref_depths", "gt_alt_depths", "gt_quals"):
+                if c in variants.columns:
+                    variants = variants.withColumn(f"{c}_blob", pack(F.col(c)))
 
-    outputs = {"variants": variants, "vcf_header": tables.vcf_header}
-    if tables.variant_impacts is not None:
-        outputs["variant_impacts"] = tables.variant_impacts
-    if tables.samples is not None:
-        outputs["samples"] = tables.samples
+        outputs = {"variants": variants, "vcf_header": tables.vcf_header}
+        if tables.variant_impacts is not None:
+            outputs["variant_impacts"] = tables.variant_impacts
+        if tables.samples is not None:
+            outputs["samples"] = tables.samples
 
-    sample_names = tables.header.samples or []
-    for col in args.expand:
-        if col not in variants.columns:
-            print(f"--expand: no such genotype column {col!r}", file=sys.stderr)
-            return 2
-        long = tables.variants.select(
-            "variant_id", F.posexplode(col).alias("sample_idx", "value")
-        )
-        if sample_names:
-            names = F.array(*[F.lit(s) for s in sample_names])
-            long = long.withColumn("sample_name", names[F.col("sample_idx")])
-        outputs[f"expanded_{col}"] = long
+        sample_names = tables.header.samples or []
+        for col in args.expand:
+            if col not in variants.columns:
+                print(f"--expand: no such genotype column {col!r}", file=sys.stderr)
+                return 2
+            long = tables.variants.select(
+                "variant_id", F.posexplode(col).alias("sample_idx", "value")
+            )
+            if sample_names:
+                names = F.array(*[F.lit(s) for s in sample_names])
+                long = long.withColumn("sample_name", names[F.col("sample_idx")])
+            outputs[f"expanded_{col}"] = long
 
-    for col in args.expand_wide:
-        if col not in variants.columns:
-            print(f"--expand-wide: no such genotype column {col!r}", file=sys.stderr)
-            return 2
-        if not sample_names:
-            print("--expand-wide requires samples in the VCF header", file=sys.stderr)
-            return 2
-        # pure projection (element_at per sample) — no shuffle, no pivot;
-        # width = cohort size, which is the layout's scale ceiling anyway
-        wide = tables.variants.select(
-            "variant_id",
-            *[
-                F.element_at(F.col(col), i + 1).alias(f"{col}_{s}")
-                for i, s in enumerate(sample_names)
-            ],
-        )
-        outputs[f"expanded_wide_{col}"] = wide
+        for col in args.expand_wide:
+            if col not in variants.columns:
+                print(f"--expand-wide: no such genotype column {col!r}", file=sys.stderr)
+                return 2
+            if not sample_names:
+                print("--expand-wide requires samples in the VCF header", file=sys.stderr)
+                return 2
+            # pure projection (element_at per sample) — no shuffle, no pivot;
+            # width = cohort size, which is the layout's scale ceiling anyway
+            wide = tables.variants.select(
+                "variant_id",
+                *[
+                    F.element_at(F.col(col), i + 1).alias(f"{col}_{s}")
+                    for i, s in enumerate(sample_names)
+                ],
+            )
+            outputs[f"expanded_wide_{col}"] = wide
 
-    n = tables.variants.count()
-    if args.jdbc_url:
-        for name, df in outputs.items():
-            write_jdbc(df, args.jdbc_url, f"{args.db}{name}", batch_size=args.batch_size)
-    elif args.db.endswith(".db"):
-        from vcf2db_spark.sinks.sqlite import write_gemini_db
+        if args.jdbc_url:
+            for name, df in outputs.items():
+                write_jdbc(df, args.jdbc_url, f"{args.db}{name}", batch_size=args.batch_size)
+        elif args.db.endswith(".db"):
+            from vcf2db_spark.sinks.sqlite import write_gemini_db
 
-        write_gemini_db(
-            args.db,
-            outputs,
-            batch_size=args.batch_size,
-            legacy=args.legacy_compression,
-        )
-    else:
-        for name, df in outputs.items():
-            part = ("chrom",) if "chrom" in df.columns else ()
-            sort = ("start",) if "start" in df.columns else ()
-            write_parquet(df, os.path.join(args.db, name), partition_by=part, sort_within=sort)
-
+            write_gemini_db(
+                args.db,
+                outputs,
+                batch_size=args.batch_size,
+                legacy=args.legacy_compression,
+            )
+        else:
+            for name, df in outputs.items():
+                part = ("chrom",) if "chrom" in df.columns else ()
+                sort = ("start",) if "start" in df.columns else ()
+                write_parquet(
+                    df, os.path.join(args.db, name), partition_by=part, sort_within=sort
+                )
+    finally:
+        tables.cached.unpersist()
     secs = time.perf_counter() - t0
+    n = tables.n_variants
     print(f"loaded {n} variants in {secs:.1f}s ({n / secs:.0f} variants/sec)")
     if owned:  # embedded callers (tests, pipelines) keep their session
         spark.stop()

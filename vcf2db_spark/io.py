@@ -1,9 +1,11 @@
-"""Fixture table loading (driver-generated parquet, TESTDATA.md)."""
+"""Table loading: fixture tables (driver-generated parquet, TESTDATA.md)
+and small tables built on the driver."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -88,3 +90,21 @@ def table_wide(
     if narrow:
         df = df.repartition(cores, F.col(key)) if key else df.repartition(cores)
     return df
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small table built on the driver, as ONE partition held in the JVM.
+
+    ``spark.createDataFrame(rows, schema)`` slices the rows over
+    ``defaultParallelism`` partitions of a Python RDD, so a sink pays one
+    task per slice (one job per slice when it streams rows to the driver)
+    and a Python worker to read them. Here the rows travel as a single
+    Arrow row holding an ``array<struct>`` (a one-row local relation, one
+    partition) that ``inline`` unpacks in the JVM; ``schema``, nullability
+    included, is kept as given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    packed = T.StructType([T.StructField("rows", T.ArrayType(schema, False), False)])
+    arr = pa.array([list(rows)], type=to_arrow_type(packed["rows"].dataType))
+    return spark.createDataFrame(pa.table({"rows": arr}), packed).select(F.inline("rows"))

@@ -4,8 +4,9 @@ Reimplements the geneimpacts pipeline the reference delegates to
 [U vcf2db.py §gene_info ~L680; geneimpacts Effect.top_severity]: the VEP
 ``CSQ`` (or SnpEff ``ANN``) INFO string is a comma-separated list of
 transcript annotations, each a ``|``-separated record whose keys come from
-the header Description — split → explode → struct, then an argmax per
-variant picks the top-severity impact to denormalize into ``variants``.
+the header Description — split → explode → struct for
+``variant_impacts``, and a per-row argmax over the same records picks the
+top-severity impact to denormalize into ``variants``.
 
 Severity order is the published Ensembl VEP consequence ranking collapsed
 to gemini's HIGH/MED/LOW, ties broken by transcript id (lowest first) —
@@ -14,7 +15,7 @@ deterministic, unit-tested against a golden table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vcf2db_spark.sources.header import VCFHeader, clean
@@ -120,86 +121,86 @@ _CANON = {
 }
 
 
+def _annotation_records(df: DataFrame, ann_col: str) -> Column:
+    """The annotation column as one token array per transcript record
+    (VEP comma-joins the records and ``|``-joins each record's fields; a
+    typed array column is already split into records)."""
+    if dict(df.dtypes).get(ann_col, "string").startswith("array"):
+        items = F.col(ann_col)
+    else:
+        items = F.split(F.col(ann_col), ",")
+    return F.transform(items, lambda a: F.split(a, r"\|"))
+
+
+def _impact_columns(toks: Column, subfields: list[str]) -> dict[str, Column]:
+    """Every ``variant_impacts`` column of ONE annotation record, given as
+    its token array ``toks``, in table order. The explode and the per-row
+    top-impact pick both build their columns here, so the two can never
+    disagree."""
+    cols = {name: F.nullif(toks.getItem(i), F.lit("")) for i, name in enumerate(subfields)}
+
+    # a VEP Consequence may be '&'-joined; severity = the most severe member
+    so_terms = F.split(F.lower(cols["consequence"]), "&")
+    rank_map = _rank_map_expr()
+    rank = F.array_min(
+        F.transform(so_terms, lambda s: F.coalesce(rank_map[s], F.lit(_UNKNOWN_RANK)))
+    )
+    cols.update({"impact_so": F.element_at(so_terms, 1), "severity_rank": rank})
+
+    names = set(cols)
+    for target, candidates in _CANON.items():
+        present = [cols[c] for c in candidates if c in names]
+        if present and target not in names:
+            cols[target] = F.coalesce(*present)
+    cols.update(
+        {
+            "impact_severity": F.when(rank <= _HIGH_MAX, "HIGH")
+            .when(rank <= _MED_MAX, "MED")
+            .otherwise("LOW"),
+            "is_lof": F.arrays_overlap(so_terms, F.array(*map(F.lit, sorted(LOF_SO)))),
+            "is_exonic": F.arrays_overlap(so_terms, F.array(*map(F.lit, sorted(EXONIC_SO)))),
+            "is_coding": F.arrays_overlap(so_terms, F.array(*map(F.lit, sorted(CODING_SO)))),
+        }
+    )
+
+    # polyphen/sift arrive as 'probably_damaging(0.957)' → pred + score
+    for tool in ("polyphen", "sift"):
+        if tool in names:
+            cols[f"{tool}_pred"] = F.nullif(
+                F.regexp_extract(cols[tool], r"^([^(]+)", 1), F.lit("")
+            )
+            cols[f"{tool}_score"] = F.regexp_extract(
+                cols[tool], r"\(([\d.]+)\)", 1
+            ).cast("double")
+    return cols
+
+
 def explode_impacts(
     df: DataFrame,
     header: VCFHeader,
     id_col: str = "variant_id",
 ) -> DataFrame:
     """One row per (variant, transcript annotation) — the
-    ``variant_impacts`` table. split + explode + struct projection; at
-    scale this is a narrow op (no shuffle)."""
+    ``variant_impacts`` table. split + explode + projection; a narrow op
+    (no shuffle)."""
     key = header.annotation_key
     if key is None:
         raise ValueError("no annotation INFO field (CSQ/ANN/EFF/BCSQ) in header")
-    subfields = [clean(s) for s in header.annotation_subfields]
     ann_col = clean(key)
-
-    ann_type = dict(df.dtypes).get(ann_col, "string")
-    ann_items = (
-        F.col(ann_col) if ann_type.startswith("array") else F.split(F.col(ann_col), ",")
-    )
+    subfields = [clean(s) for s in header.annotation_subfields]
     out = df.filter(F.col(ann_col).isNotNull()).select(
-        id_col, F.explode(ann_items).alias("_ann")
+        id_col, F.explode(_annotation_records(df, ann_col)).alias("_toks")
     )
-    toks = F.split(F.col("_ann"), r"\|")
-    cols = {name: F.nullif(toks.getItem(i), F.lit("")) for i, name in enumerate(subfields)}
-    out = out.withColumns(cols).drop("_ann")
-
-    # a VEP Consequence may be '&'-joined; severity = the most severe member
-    so_terms = F.transform(F.split(F.lower(F.col("consequence")), "&"), lambda s: s)
-    rank_map = _rank_map_expr()
-    ranks = F.transform(so_terms, lambda s: F.coalesce(rank_map[s], F.lit(_UNKNOWN_RANK)))
-    out = out.withColumns(
-        {
-            "impact_so": F.element_at(so_terms, 1),
-            "severity_rank": F.array_min(ranks),
-        }
-    )
-
-    canon = {}
-    names = set(out.columns)
-    for target, candidates in _CANON.items():
-        present = [c for c in candidates if c in names]
-        if present and target not in names:
-            canon[target] = F.coalesce(*[F.col(c) for c in present])
-    sev_cases = (
-        F.when(F.col("severity_rank") <= _HIGH_MAX, "HIGH")
-        .when(F.col("severity_rank") <= _MED_MAX, "MED")
-        .otherwise("LOW")
-    )
-    lof_arr = F.array(*[F.lit(s) for s in sorted(LOF_SO)])
-    exonic_arr = F.array(*[F.lit(s) for s in sorted(EXONIC_SO)])
-    coding_arr = F.array(*[F.lit(s) for s in sorted(CODING_SO)])
-    canon.update(
-        {
-            "impact_severity": sev_cases,
-            "is_lof": F.arrays_overlap(so_terms, lof_arr),
-            "is_exonic": F.arrays_overlap(so_terms, exonic_arr),
-            "is_coding": F.arrays_overlap(so_terms, coding_arr),
-        }
-    )
-    out = out.withColumns(canon)
-
-    # polyphen/sift arrive as 'probably_damaging(0.957)' → pred + score
-    for tool in ("polyphen", "sift"):
-        if tool in names:
-            out = out.withColumns(
-                {
-                    f"{tool}_pred": F.nullif(
-                        F.regexp_extract(F.col(tool), r"^([^(]+)", 1), F.lit("")
-                    ),
-                    f"{tool}_score": F.regexp_extract(
-                        F.col(tool), r"\(([\d.]+)\)", 1
-                    ).cast("double"),
-                }
-            )
-    return out
+    cols = _impact_columns(F.col("_toks"), subfields)
+    return out.select(id_col, *[c.alias(name) for name, c in cols.items()])
 
 
 def top_impacts(impacts: DataFrame, id_col: str = "variant_id") -> DataFrame:
-    """Argmax per variant: most severe impact, ties → lowest transcript —
-    ``min(struct(rank, transcript, ...))`` = one partial-aggregated shuffle,
-    no window sort (geneimpacts Effect.top_severity semantics)."""
+    """Argmax per variant over the exploded table: most severe impact,
+    ties → lowest transcript — ``min(struct(rank, transcript, ...))`` in
+    one partial-aggregated shuffle (geneimpacts Effect.top_severity
+    semantics). The load uses the per-row ``with_top_impact``; this
+    groupBy form is its reference in the tests."""
     payload = [c for c in impacts.columns if c != id_col]
     best = F.min(
         F.struct(
@@ -214,8 +215,7 @@ def top_impacts(impacts: DataFrame, id_col: str = "variant_id") -> DataFrame:
 
 def with_top_impact(
     variants: DataFrame,
-    impacts: DataFrame,
-    id_col: str = "variant_id",
+    header: VCFHeader,
     columns: tuple[str, ...] = (
         "gene", "transcript", "is_exonic", "is_coding", "is_lof", "exon",
         "codon_change", "aa_change", "aa_length", "biotype", "impact_so",
@@ -223,8 +223,31 @@ def with_top_impact(
         "sift_score",
     ),
 ) -> DataFrame:
-    """Denormalize the top impact onto variants (left join keeps
-    un-annotated variants with null impact columns, as the reference does)."""
-    top = top_impacts(impacts, id_col)
-    keep = [c for c in columns if c in top.columns]
-    return variants.join(top.select(id_col, *keep), on=id_col, how="left")
+    """Denormalize the top impact onto variants, in place of the raw
+    annotation column.
+
+    Per row, no shuffle: ``array_min`` over one
+    ``struct(rank, coalesce(transcript, '~'), <impact columns>)`` per
+    annotation record picks the same record as ``top_impacts``'s
+    ``min(struct)`` over the exploded table — the same struct, so the same
+    order, ties included. An unannotated variant (NULL column) or one with
+    no records keeps NULL impact columns, as the reference's does."""
+    ann_col = clean(header.annotation_key)
+    subfields = [clean(s) for s in header.annotation_subfields]
+
+    def ranked(toks: Column) -> Column:
+        cols = _impact_columns(toks, subfields)
+        return F.struct(
+            cols["severity_rank"].alias("_r"),
+            F.coalesce(cols["transcript"], F.lit("~")).alias("_t"),
+            *[c.alias(name) for name, c in cols.items()],
+        )
+
+    top = F.array_min(F.transform(_annotation_records(variants, ann_col), ranked))
+    impact_names = _impact_columns(F.col(ann_col), subfields).keys()
+    keep = [c for c in columns if c in impact_names]
+    rest = [c for c in variants.columns if c != ann_col]
+    # two projections: the array_min runs once per row, not once per field
+    return variants.withColumn("_top", top).select(
+        *rest, *[F.col("_top")[c].alias(c) for c in keep]
+    )

@@ -15,7 +15,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
+from vcf2db_spark.io import local_table
 from vcf2db_spark.operators.impacts import explode_impacts, with_top_impact
 from vcf2db_spark.operators.variants import (
     assign_variant_id,
@@ -25,6 +27,21 @@ from vcf2db_spark.operators.variants import (
 from vcf2db_spark.sources.header import VCFHeader, clean, parse_header, read_header_text
 from vcf2db_spark.sources.ped import read_ped
 from vcf2db_spark.sources.vcf import read_vcf
+
+_HEADER_SCHEMA = T.StructType([T.StructField("header_text", T.StringType(), True)])
+
+
+@dataclass
+class PersistedStages:
+    """The stages ``load_vcf`` persisted; ``unpersist()`` releases all of
+    them (idempotent), latest first so no earlier stage is re-planned
+    under a later one."""
+
+    stages: tuple[DataFrame, ...]
+
+    def unpersist(self, blocking: bool = False) -> None:
+        for df in reversed(self.stages):
+            df.unpersist(blocking)
 
 
 @dataclass
@@ -36,9 +53,12 @@ class VCFTables:
     samples: DataFrame | None
     vcf_header: DataFrame
     header: VCFHeader
-    #: the persisted parse stage when ``cache_parse=True`` — callers own
-    #: its lifetime (``tables.cached.unpersist()`` when done)
-    cached: DataFrame | None = None
+    #: every stage ``load_vcf`` persisted (the range-sorted id stage, and
+    #: the parse with ``cache_parse=True``) — callers own their lifetime:
+    #: ``tables.cached.unpersist()`` once the tables are consumed
+    cached: PersistedStages | None = None
+    #: rows in ``variants``, known from the id offsets without a job
+    n_variants: int | None = None
 
 
 def load_vcf(
@@ -50,13 +70,22 @@ def load_vcf(
     num_partitions: int | None = None,
     cache_parse: bool = False,
     decompose: str = "reject",
-    target_partition_bytes: int = 64 << 20,
+    target_partition_bytes: int | None = None,
 ) -> VCFTables:
-    """``cache_parse=True`` persists the parsed stream so the downstream
-    consumers (variant_id's range sampling, the variants sink, the impacts
-    sink) share ONE Python-parse pass instead of re-reading the text. Use
-    when the parsed batch fits cluster memory/disk; at larger scale write
-    the parsed stage to parquet and continue from there instead."""
+    """Parse, derive and id a VCF into the four tables as lazy plans.
+
+    The range-sorted stage ``assign_variant_id`` persists is the load's
+    only shuffle of row data; ``variants`` (with its top impact picked
+    per row), ``variant_impacts`` and any expansion are projections of
+    it. ``cache_parse=True`` also persists the parse itself, so the id
+    step's range sampling and its sort share ONE Python-parse pass
+    instead of reading the text twice. Use it when the parsed batch fits
+    cluster memory/disk; at larger scale write the parsed stage to
+    parquet and continue from there instead. Either way release
+    ``tables.cached`` when done.
+
+    ``target_partition_bytes=None`` lets ``read_vcf`` size scan splits
+    to the file and the cluster."""
     header = parse_header(read_header_text(vcf_path))
 
     raw = read_vcf(
@@ -72,26 +101,27 @@ def load_vcf(
     v = with_variant_type(raw)
     if include_genotypes and header.samples:
         v = with_genotype_stats(v)
-    v = assign_variant_id(v, num_partitions=num_partitions)
+    ids = assign_variant_id(v, num_partitions=num_partitions)
+    v = ids.df
 
     impacts = None
     ann_key = header.annotation_key
     if ann_key is not None and clean(ann_key) in v.columns:
         impacts = explode_impacts(v, header)
-        v = with_top_impact(v.drop(clean(ann_key)), impacts)
+        v = with_top_impact(v, header)
 
     samples = None
     if ped_path is not None:
         samples = read_ped(spark, ped_path, vcf_samples=header.samples or None)
 
-    vcf_header_df = spark.createDataFrame([(header.raw,)], "header_text string")
     return VCFTables(
         variants=v,
         variant_impacts=impacts,
         samples=samples,
-        vcf_header=vcf_header_df,
+        vcf_header=local_table(spark, [(header.raw,)], _HEADER_SCHEMA),
         header=header,
-        cached=raw if cache_parse else None,
+        cached=PersistedStages((raw, ids.persisted) if cache_parse else (ids.persisted,)),
+        n_variants=ids.count,
     )
 
 
@@ -139,7 +169,7 @@ def open_artifact(spark: SparkSession, path: str) -> VCFTables:
         header = parse_header(raw)
     else:  # header-less artifact: SQL works, gt-filters can't resolve samples
         header = parse_header("##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT")
-        vcf_header = spark.createDataFrame([(header.raw,)], "header_text string")
+        vcf_header = local_table(spark, [(header.raw,)], _HEADER_SCHEMA)
     return VCFTables(
         variants=variants,
         variant_impacts=load("variant_impacts"),

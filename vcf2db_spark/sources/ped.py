@@ -4,9 +4,10 @@
 PED is whitespace-delimited: family_id, name, paternal_id, maternal_id,
 sex, phenotype [+ extra columns, whose names may come from a ``#family_id
 name ...`` comment header]. The samples table is a small dimension — it is
-parsed driver-side and becomes a broadcast-join side; ``sample_id`` is the
-1-based genotype-array index, fixed by the VCF header's sample order (the
-same contract the reference uses to index its genotype blobs).
+parsed driver-side into one JVM-held partition (``io.local_table``) and
+becomes a broadcast-join side; ``sample_id`` is the 1-based genotype-array
+index, fixed by the VCF header's sample order (the same contract the
+reference uses to index its genotype blobs).
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from vcf2db_spark.io import local_table
 from vcf2db_spark.sources.header import clean
 
 _CORE = ("family_id", "name", "paternal_id", "maternal_id", "sex", "phenotype")
@@ -87,4 +89,4 @@ def read_ped(
                 + [rec.get(e) for e in all_extra]
             )
         )
-    return spark.createDataFrame(data, schema)
+    return local_table(spark, data, schema)
