@@ -23,6 +23,16 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def vcf_format(spark):
+    """``spark.read.format("vcf")`` with ``VCFDataSource`` registered: the
+    VCF entry point whose locus filters prune partitions."""
+    from vcf2db_spark.sources.vcf import VCFDataSource
+
+    spark.dataSource.register(VCFDataSource)
+    return lambda: spark.read.format("vcf")
+
+
+@pytest.fixture(scope="session")
 def oracle_con():
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")

@@ -111,7 +111,7 @@ def test_bcf_contig_scan_and_gt_decode(paths):
     assert by_pos[("chr2", "250")][11].startswith("./1")  # half-call
 
 
-def test_csi_partition_pruning(spark, paths):
+def test_csi_partition_pruning(vcf_format, paths):
     """Pushed-down chrom/locus predicates prune PARTITIONS through the
     CSI (not just rows through the residual filter)."""
     from vcf2db_spark.sources.header import build_schema, parse_header
@@ -138,11 +138,10 @@ def test_csi_partition_pruning(spark, paths):
     ]
     assert rows == [("chr1", "300")]
     # end-to-end through Spark with the pushdown
-    from vcf2db_spark.sources.vcf import read_vcf
-
-    got = read_vcf(spark, bcf).filter(
+    got = vcf_format().load(bcf).filter(
         "chrom = 'chr1' AND start >= 250 AND start < 350"
     )
+    assert got.rdd.getNumPartitions() == 1
     assert [r["start"] for r in got.collect()] == [299]
 
 
@@ -249,7 +248,7 @@ def test_bcf_version_magic_rejected(tmp_path):
     assert read_bcf_header_text(ok) == "##"
 
 
-def test_csi_planner_honors_idx_overrides(spark, tmp_path):
+def test_csi_planner_honors_idx_overrides(spark, vcf_format, tmp_path):
     """A reheadered BCF can carry out-of-order IDX= contig slots: the
     record rids follow the IDX numbering, not header file order. When
     the .csi carries no aux names (htslib writes l_aux=0 for BCF), the
@@ -282,7 +281,8 @@ def test_csi_planner_honors_idx_overrides(spark, tmp_path):
     write_bcf(vcf, bcf, index_path=csi)
     # strip the embedded aux names to emulate an htslib-written BCF CSI
     write_csi(dataclasses.replace(read_csi(csi), names=[]), csi)
-    got = read_vcf(spark, bcf).filter("chrom = 'chrA'")
+    got = vcf_format().load(bcf).filter("chrom = 'chrA'")
+    assert got.rdd.getNumPartitions() == 1
     assert sorted(r["start"] for r in got.collect()) == [149, 299]
     assert read_vcf(spark, bcf).count() == 4
 

@@ -194,21 +194,23 @@ def test_seek_read_partitions_are_contigs(spark, vcf_paths):
     assert df.rdd.getNumPartitions() == 2
 
 
-def test_pushdown_prunes_partitions(spark, vcf_paths):
+def test_pushdown_prunes_partitions(spark, vcf_format, vcf_paths):
     plain, gz = vcf_paths
-    df = read_vcf(spark, gz).filter("chrom = 'chr2' AND start >= 300000 AND start < 900000")
+    pred = "chrom = 'chr2' AND start >= 300000 AND start < 900000"
+    assert vcf_format().load(gz).rdd.getNumPartitions() == 2
+    df = vcf_format().load(gz).filter(pred)
+    assert df.rdd.getNumPartitions() == 1  # chr1's partition is pruned
     rows = _collect_sorted(df)
-    want = _collect_sorted(
-        read_vcf(spark, plain).filter(
-            "chrom = 'chr2' AND start >= 300000 AND start < 900000"
-        )
-    )
+    want = _collect_sorted(read_vcf(spark, plain).filter(pred))
     assert rows == want and 0 < len(rows) < N_PER_CONTIG
 
 
-def test_pushdown_empty_region(spark, vcf_paths):
+def test_pushdown_empty_region(vcf_format, vcf_paths):
     _, gz = vcf_paths
-    assert read_vcf(spark, gz).filter("chrom = 'chrM'").count() == 0
+    df = vcf_format().load(gz).filter("chrom = 'chrM'")
+    # every contig pruned: the one empty partition Spark needs
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 0
 
 
 def test_index_build_mode(spark, tmp_path):
@@ -216,11 +218,11 @@ def test_index_build_mode(spark, tmp_path):
     open(plain, "w").write(_mk_vcf_text(200, seed=5))
     gz = plain + ".gz"
     compress_file(plain, gz)
-    df = read_vcf(spark, gz, index="build")
-    assert df.count() == 400  # first action plans the read → builds the index
+    df = read_vcf(spark, gz, index="build")  # planning builds the index
     import os
 
     assert os.path.exists(gz + ".tbi")
+    assert df.count() == 400
     # the freshly built index now drives per-contig seek partitions
     assert read_vcf(spark, gz).rdd.getNumPartitions() == 2
 
@@ -257,11 +259,18 @@ def test_intra_contig_split_rows_identical(spark, vcf_paths):
     assert _collect_sorted(split_df) == whole
 
 
-def test_intra_contig_split_with_pushdown(spark, vcf_paths):
+def test_intra_contig_split_with_pushdown(spark, vcf_format, vcf_paths):
     plain, gz = vcf_paths
     pred = "chrom = 'chr2' AND start >= 300000 AND start < 900000"
     want = _collect_sorted(read_vcf(spark, plain).filter(pred))
-    got = _collect_sorted(
-        read_vcf(spark, gz, target_partition_bytes=2048).filter(pred)
-    )
+    split = vcf_format().option("targetPartitionBytes", "2048")
+    df = split.load(gz).filter(pred)
+    # the planner saw the pushed contig and locus window: as many
+    # partitions as the index cuts for that window alone
+    idx = read_tbi(gz + ".tbi")
+    n_window = len(idx.partition_chunks("chr2", 300000, 900000, 2048))
+    n_contig = len(idx.partition_chunks("chr2", 0, 1 << 29, 2048))
+    assert 0 < n_window < n_contig < split.load(gz).rdd.getNumPartitions()
+    assert df.rdd.getNumPartitions() == n_window
+    got = _collect_sorted(df)
     assert got == want and len(got) > 0

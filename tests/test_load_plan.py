@@ -1,6 +1,7 @@
-"""Shape of the VCF load: the persisted, range-sorted parse is its only
-shuffle of row data, ``variant_id`` is stamped in the JVM, the top impact
-is picked per row, and every stage the load persists is released.
+"""Shape of the VCF load: the scan is a ``mapInArrow`` over driver-planned
+splits, the persisted, range-sorted parse is its only shuffle of row data,
+``variant_id`` is stamped in the JVM, the top impact is picked per row,
+and every stage the load persists is released.
 
 Runs in the default suite: each test loads a file of a few dozen rows
 into the shared session."""
@@ -10,11 +11,12 @@ from __future__ import annotations
 import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.fixtures.make_mini_vcf import write_fixture
 from vcf2db_spark import pipeline
-from vcf2db_spark.__main__ import main
+from vcf2db_spark.__main__ import build_parser, main
 from vcf2db_spark.lifecycle import Lifecycle
 from vcf2db_spark.operators.impacts import explode_impacts, top_impacts, with_top_impact
 from vcf2db_spark.sources.bgzf import compress_file
@@ -71,6 +73,19 @@ def test_cli_variants_plan_is_one_range_shuffle(spark, tmp_path, monkeypatch, ca
         assert node not in plan, f"{node} in the variants plan:\n{plan}"
     exchanges = [ln for ln in _without_initial_plans(plan) if "Exchange " in ln]
     assert len(exchanges) == 1 and "Exchange rangepartitioning" in exchanges[0], plan
+    # the VCF is scanned by one mapInArrow over driver-planned splits,
+    # not through a Python DataSource (BatchScan)
+    assert "BatchScan" not in plan, plan
+    lines = plan.splitlines()
+    scans = [i for i, ln in enumerate(lines) if "MapInArrow " in ln]
+    assert scans and all("Range (" in lines[i + 1] for i in scans), plan
+
+
+def test_cli_cores_come_from_the_env_var_only():
+    ap = build_parser()
+    assert "SPARK_GRAFT_CPUS" in ap.epilog
+    with pytest.raises(SystemExit):
+        ap.parse_args(["a.vcf", "out", "--cpus", "4"])
 
 
 def test_cli_sqlite_load_releases_its_stages(spark, tmp_path):

@@ -54,7 +54,7 @@ def main() -> None:
     from vcf2db_spark.sources.bgzf import compress_file
     from vcf2db_spark.sources.csi import read_csi
     from vcf2db_spark.sources.tabix import index_vcf
-    from vcf2db_spark.sources.vcf import read_vcf
+    from vcf2db_spark.sources.vcf import VCFDataSource, read_vcf
     from vcf2db_spark.session import get_spark
 
     tag = f"{args.n}x{args.samples}x{args.contigs}"
@@ -104,7 +104,10 @@ def main() -> None:
     )
 
     # (a) CSI pruning: single-contig + range predicate, pushed down
+    # through the DataSource (read_vcf's scan prunes nothing)
     from pyspark.sql import functions as F
+
+    spark.dataSource.register(VCFDataSource)
 
     contig = f"chr{args.contigs // 2}"
     # ~1/8th of one contig's locus span (positions step 10..500/record,
@@ -113,7 +116,7 @@ def main() -> None:
     lo, hi = pos_max // 8, pos_max // 4
     pr_walls, pr_rows = [], 0
     for _ in range(args.passes):
-        df = read_vcf(spark, bcf).filter(
+        df = spark.read.format("vcf").load(bcf).filter(
             (F.col("chrom") == contig)
             & (F.col("start") >= lo)
             & (F.col("start") < hi)
@@ -132,6 +135,7 @@ def main() -> None:
         "rows": pr_rows,
         "seconds": round(min(pr_walls), 2),
         "plan_partitions": len(spans),
+        "tasks": df.rdd.getNumPartitions(),
         "plan_bytes": sum(spans),
         "max_partition_bytes": max(spans) if spans else 0,
         "file_fraction": round(sum(spans) / os.path.getsize(bcf), 4),

@@ -36,7 +36,8 @@ def build_parser() -> argparse.ArgumentParser:
         "`query <artifact> -q SQL [--gt-filter ...]`, "
         "`stats <artifact> --tstv|--snp-counts|--sfs|--roh|--burden`, "
         "`inheritance <artifact> --model de_novo|...`, "
-        "`annotate <artifact> <bed> -o OUT`.",
+        "`annotate <artifact> <bed> -o OUT`. "
+        "Local cores: the SPARK_GRAFT_CPUS environment variable (default 32).",
     )
     ap.add_argument("vcf", help="decomposed, annotated VCF (.vcf or .vcf.gz)")
     ap.add_argument("ped", nargs="?", default=None, help="PED pedigree file")
@@ -64,7 +65,6 @@ def build_parser() -> argparse.ArgumentParser:
         "semantics) instead of rejecting them",
     )
     ap.add_argument("--jdbc-url", default=None, help="jdbc:... target instead of parquet")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
     return ap
 
 

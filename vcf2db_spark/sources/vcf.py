@@ -1,22 +1,33 @@
-"""VCF DataSource for Spark (SURVEY.md §2A A1).
+"""VCF source for Spark (SURVEY.md §2A A1).
 
 Spark-first replacement for the reference's cyvcf2/htslib streaming loop
-[U vcf2db.py §VCFDB.load ~L640]: a Python DataSource (Spark 4
-``pyspark.sql.datasource``) whose schema comes from the VCF header (A2) and
-whose partitions are contigs — mirroring tabix seek semantics, so a
-contig/locus predicate prunes partitions.
+[U vcf2db.py §VCFDB.load ~L640]: the schema comes from the VCF header (A2)
+and the partitions are contigs — mirroring tabix seek semantics.
 
 Scale design (100 TB): one partition per (contig, tabix chunk-range). With
 a BGZF input and a ``.tbi`` index (``sources.bgzf`` / ``sources.tabix`` —
 pure-Python readers of the htslib formats), each partition **seeks** to its
-contig's virtual-offset range and inflates only those blocks; pushed-down
-``chrom``/``start``/``end`` predicates (Spark 4 DataSource
-``pushFilters``) prune partitions and narrow the chunk ranges — the
-distributed twin of a tabix region query. Plain-text/plain-gzip inputs
-fall back to per-partition filtered scans (same row protocol, so the two
-paths stay interchangeable). Genotype matrices land as typed arrays;
-Parquet page compression replaces the reference's snappy blobs (A8) — the
-byte-parity codec lives in ``functions.codecs``.
+contig's virtual-offset range and inflates only those blocks. Plain-text/
+plain-gzip inputs fall back to per-partition filtered scans (same row
+protocol, so the two paths stay interchangeable). Genotype matrices land
+as typed arrays; Parquet page compression replaces the reference's snappy
+blobs (A8) — the byte-parity codec lives in ``functions.codecs``.
+
+Two entry points share one planner and one parse (``VCFReader``):
+
+- ``read_vcf`` — the load path. It plans the splits on the driver and
+  scans them with one ``mapInArrow`` over ``spark.range`` (task *i* reads
+  split *i*). It prunes nothing: a filter on its result runs after a full
+  scan. It avoids the Python DataSource because Spark runs every DataSource
+  planner call (register, load, plan the read) in its own per-module
+  Python daemon: on a 4-core host, planning the first read of a session
+  took 5.1 s through the DataSource and 1.2 s here, each later plan
+  0.29 s and 0.07 s.
+- ``spark.read.format("vcf")`` after
+  ``spark.dataSource.register(VCFDataSource)`` — the one entry point with
+  locus pushdown: ``chrom``/``start``/``end`` predicates (Spark 4
+  DataSource ``pushFilters``) prune partitions and narrow the chunk ranges,
+  the distributed twin of a tabix region query.
 """
 
 from __future__ import annotations
@@ -376,10 +387,8 @@ class VCFReader(DataSourceReader):
 
         self.is_bcf = is_bcf(self.path)
         self.header = parse_header(_header_text(self.path))
-        split = opt("partitionByContig", "true").lower() == "true"
         self.decompose = opt("decompose", "reject").lower()
-        self.arrow = opt("arrowBatches", "true").lower() == "true"
-        self.contigs = self.header.contigs if split else []
+        self.contigs = self.header.contigs
         #: target COMPRESSED bytes per partition for intra-contig splitting
         #: (VERDICT r5 item 5): a whole-genome single-contig VCF must not
         #: collapse to one task. 0 disables (one partition per contig).
@@ -495,6 +504,8 @@ class VCFReader(DataSourceReader):
         return [ContigPartition(None)]
 
     def read(self, partition: ContigPartition):
+        """Columnar RecordBatches of ``partition``'s rows: no per-row
+        pickling and no row→columnar conversion on the JVM side."""
         if self.is_bcf:
             rows = _iter_bcf(
                 self.path, self.header, self.schema_, partition, self.decompose
@@ -507,12 +518,6 @@ class VCFReader(DataSourceReader):
             rows = _iter_records(
                 self.path, self.header, self.schema_, partition.contig, self.decompose
             )
-        if not self.arrow:
-            yield from rows
-            return
-        # Arrow fast path: hand Spark columnar RecordBatches instead of
-        # per-row tuples — skips per-row pickling and row→columnar
-        # conversion on the JVM side.
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -536,25 +541,33 @@ def _to_record_batch(rows: list[tuple], arrow_schema, pa):
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+def _schema(path: str, black_list: tuple[str, ...], include_genotypes: bool) -> T.StructType:
+    header = parse_header(_header_text(path))
+    return build_schema(header, black_list=black_list, include_genotypes=include_genotypes)
+
+
 class VCFDataSource(DataSource):
     """``spark.read.format("vcf").load(path)`` after
-    ``spark.dataSource.register(VCFDataSource)``.
+    ``spark.dataSource.register(VCFDataSource)``: the entry point whose
+    ``chrom``/``start``/``end`` filters prune partitions (it needs
+    ``spark.sql.python.filterPushdown.enabled``, which ``get_spark`` and
+    ``pin_session_conf`` set).
 
     Options: ``black_list`` (comma-separated INFO IDs to drop — the
     reference's ``--black-list`` [U vcf2db.py §main ~L1150]);
-    ``partitionByContig`` (default true); ``include_genotypes``
-    (default true); ``index`` (``auto`` = use ``{path}.tbi`` when present,
-    ``build`` = create it if missing, ``none`` = filtered scans only)."""
+    ``include_genotypes`` (default true); ``index`` (``auto`` = use
+    ``{path}.tbi`` when present, ``build`` = create it if missing,
+    ``none`` = filtered scans only); ``decompose``;
+    ``targetPartitionBytes`` (default 64 MB)."""
 
     @classmethod
     def name(cls) -> str:
         return "vcf"
 
     def schema(self) -> T.StructType:
-        header = parse_header(_header_text(self.options["path"]))
         bl = tuple(x for x in self.options.get("black_list", "").split(",") if x)
         inc = self.options.get("include_genotypes", "true").lower() == "true"
-        return build_schema(header, black_list=bl, include_genotypes=inc)
+        return _schema(self.options["path"], bl, inc)
 
     def reader(self, schema: T.StructType) -> VCFReader:
         return VCFReader(schema, dict(self.options))
@@ -565,26 +578,26 @@ def read_vcf(
     path: str,
     black_list: tuple[str, ...] = (),
     include_genotypes: bool = True,
-    partition_by_contig: bool = True,
-    arrow_batches: bool = True,
     index: str = "auto",
     decompose: str = "reject",
     target_partition_bytes: int | None = None,
 ) -> DataFrame:
     """Library entry point (reference entry point 2, [U §VCFDB.__init__ ~L580]).
 
+    Plans the splits on the driver (header, index and ``index='build'``
+    happen here, not at the first action) and returns one ``mapInArrow``
+    over ``spark.range(n)``: task *i* parses split *i* into Arrow batches.
+    No filter on the result is pushed into the scan; a locus query that
+    should read only its contig's blocks goes through
+    ``spark.read.format("vcf")`` (``VCFDataSource``). The load skips the
+    DataSource because Spark runs each of its planner calls in a
+    per-module Python daemon (see the module docstring).
+
     ``decompose='split'`` decomposes multi-allelic records in-engine
     (vt decompose -s semantics: per-alt INFO A/R slicing, GT allele
     remap with other-alt→'.', AD subsetting, Number=G dropped) — the
     preprocessing step the reference requires users to run externally.
-    The default ``'reject'`` preserves the reference's precondition.
-
-    ``arrow_batches`` hands Spark columnar RecordBatches instead of
-    per-row tuples. Measured locally the two are within noise (the Python
-    line-parse dominates, ~220k variants/sec/32 threads warm); the Arrow
-    shape is kept because it removes the per-row pickle on the
-    executor↔Python boundary, which matters once the parse itself is
-    cheaper (bgzip block readers, tabix seeks)."""
+    The default ``'reject'`` preserves the reference's precondition."""
     if target_partition_bytes is None:
         # Adaptive split target: the Python decode (not IO) is the scan
         # bottleneck, so a small-but-expensive file should fan out across
@@ -602,20 +615,22 @@ def read_vcf(
             )
         except OSError:
             target_partition_bytes = 64 << 20
-    spark.dataSource.register(VCFDataSource)
-    try:
-        # pushFilters requires this conf; Spark rejects the read without it
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    reader = (
-        spark.read.format("vcf")
-        .option("black_list", ",".join(black_list))
-        .option("include_genotypes", str(include_genotypes).lower())
-        .option("partitionByContig", str(partition_by_contig).lower())
-        .option("arrowBatches", str(arrow_batches).lower())
-        .option("index", index)
-        .option("decompose", decompose)
-        .option("targetPartitionBytes", str(target_partition_bytes))
+    schema = _schema(path, tuple(black_list), include_genotypes)
+    reader = VCFReader(
+        schema,
+        {
+            "path": path,
+            "index": index,
+            "decompose": decompose,
+            "targetPartitionBytes": str(target_partition_bytes),
+        },
     )
-    return reader.load(path)
+    parts = reader.partitions()
+    reader.index = None  # planned: the tasks need the splits, not the index
+
+    def scan(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from reader.read(parts[i])
+
+    return spark.range(0, len(parts), 1, len(parts)).mapInArrow(scan, schema)
